@@ -71,6 +71,26 @@ def test_segment_scan_is_pruned(spark, built):
     # asked for: ReadSchema carries only the selected columns
     assert "n_postings" not in plan.split("ReadSchema")[1].split("\n")[0]
 
+    # a wide batch (1,200 terms, all routed to shard 1) keeps both prunes
+    wide = [t * CFG.num_shards + 1 for t in range(1200)]
+    plan = plan_of(_matched_segments(spark, built, wide, CFG.num_shards))
+    part = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
+    pushed = [ln for ln in plan.splitlines() if "PushedFilters" in ln]
+    assert part and "shard_id" in part[0]
+    assert pushed and "term_id" in pushed[0]
+
+
+def test_published_schemas_match_written_tables(spark, built):
+    """Each index table's declared schema (read without inference) is
+    the schema its writer produced, column for column."""
+    import os
+    from word2doc_spark.index.build import INDEX_SCHEMAS, read_index_table
+    for name in INDEX_SCHEMAS:
+        inferred = spark.read.parquet(os.path.join(built, name)).schema
+        declared = read_index_table(spark, built, name).schema
+        assert [(f.name, f.dataType) for f in declared] == \
+               [(f.name, f.dataType) for f in inferred], name
+
 
 def test_exact_search_broadcasts_small_sides(spark, built):
     """Query terms and the top-k url lookup are broadcast — the segment
@@ -136,3 +156,32 @@ def test_doc_partitioned_query_plan(spark, built):
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
     assert "FlatMapGroupsInPandas" in plan or "ApplyInPandas" in plan
+
+
+def test_warm_search_fast_job_budget(spark, built):
+    """A warm single-query search_fast, issued as a serve loop issues it
+    (a new query DataFrame per call), runs at most 5 Spark jobs: the
+    analysis probe, then under AQE one job per query stage — scoring,
+    top-k broadcast, docs join, result. Term dfs come from a pyarrow read
+    and the index tables are read with their published schemas, so no
+    inference or term-stats job runs; the url ordering samples nothing."""
+    from word2doc_spark.query.fast import search_fast
+
+    sc = spark.sparkContext
+
+    def call():
+        qdf = spark.createDataFrame([(1, "spark shuffle partition")],
+                                    "query_id long, query string")
+        return search_fast(spark, built, qdf, k=5,
+                           score_mode="bm25").collect()
+
+    for _ in range(2):   # term dfs cached, segment cache materialized
+        call()
+    group = "w2d-job-budget"
+    sc.setJobGroup(group, "warm single-query search_fast")
+    try:
+        rows = call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rows
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 5

@@ -115,3 +115,38 @@ def test_stale_layout_wiped_on_config_change(spark, tmp_path):
     assert sorted(shard_dirs) == ["shard_id=0", "shard_id=1"]
     rows = Manifest(index_dir).shard_metrics()
     assert [r["shard_id"] for r in rows] == [0, 1]
+
+
+def test_encode_failure_joins_dl_thread(spark, tmp_path, monkeypatch):
+    """A failing segment encode must not return while the doclen writer
+    still runs: once build_index raises, the dl thread is joined and
+    nothing under doclen/doclen_seg changes any more (a live writer would
+    race the caller's retry)."""
+    import threading
+    import time
+    from word2doc_spark.index import build as B
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("encode failure")
+
+    monkeypatch.setattr(B, "_encode_segments", boom)
+    index_dir = str(tmp_path / "encfail")
+    with pytest.raises(RuntimeError, match="encode failure"):
+        build_index(spark, synthetic_pages(spark, 60, num_partitions=2),
+                    index_dir, CFG, input_token="encode-fail")
+    assert not any(t.name == "build-dl" and t.is_alive()
+                   for t in threading.enumerate())
+
+    def snapshot():
+        out = {}
+        for sub in ("doclen", "doclen_seg"):
+            for root, _, files in os.walk(os.path.join(index_dir, sub)):
+                for f in files:
+                    st = os.stat(os.path.join(root, f))
+                    out[os.path.join(root, f)] = (st.st_size,
+                                                  st.st_mtime_ns)
+        return out
+
+    before = snapshot()
+    time.sleep(2.0)
+    assert snapshot() == before

@@ -252,6 +252,99 @@ def test_no_id_keyed_caches_in_kernels():
                             and nxt.string == "("), (mod, t.start)
 
 
+def test_query_predicates_built_in_one_expression():
+    """Column predicates in the query path are built as one SQL
+    expression (exact._in_ids / exact._int_array), never one Py4J literal
+    at a time: ``.isin(`` only on a pyarrow field (``pc.field(...)``) or a
+    pandas column (``frame[...]``), and no ``F.array(*[...])``."""
+    import ast
+    import glob
+    import os
+    qdir = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "word2doc_spark", "query")
+    paths = sorted(glob.glob(os.path.join(qdir, "*.py")))
+    assert paths
+    for path in paths:
+        with open(path) as f:
+            tree = ast.parse(f.read())
+        for node in ast.walk(tree):
+            if not (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)):
+                continue
+            recv = node.func.value
+            where = (os.path.basename(path), node.lineno)
+            if node.func.attr == "isin":
+                arrow_field = (isinstance(recv, ast.Call)
+                               and ast.unparse(recv.func) == "pc.field")
+                assert arrow_field or isinstance(recv, ast.Subscript), where
+            if node.func.attr == "array" and ast.unparse(recv) == "F":
+                assert not any(isinstance(a, ast.Starred)
+                               for a in node.args), where
+
+
+@pytest.mark.parametrize("mode", ["drqa", "bm25"])
+def test_semi_join_pruning_identity(spark, built, mode, monkeypatch):
+    """Above _ISIN_PRUNE_LIMIT ids, term pruning is a broadcast left-semi
+    join against an Arrow-built id table. With the limit at 1, the pruned
+    segment scan and the serving-cache filter both take that branch, and
+    exact, fast and WAND still return search_exact's rows."""
+    import math
+    from tests.test_plans import plan_of
+    from word2doc_spark.query import exact as E
+    from word2doc_spark.query import ranges as R
+    from word2doc_spark.query.fast import search_fast
+    from word2doc_spark.query.wand import search_wand
+
+    qdf = spark.createDataFrame(QUERIES, "query_id long, query string")
+    want = E.search_exact(spark, built, qdf, k=5, score_mode=mode).collect()
+    assert want
+
+    def check(df):
+        got = df.collect()
+        assert [(r["query_id"], r["rank"], r["doc_id"], r["url"])
+                for r in got] == \
+               [(r["query_id"], r["rank"], r["doc_id"], r["url"])
+                for r in want]
+        assert all(math.isclose(a["score"], b["score"], rel_tol=1e-9)
+                   for a, b in zip(got, want))
+        assert "LeftSemi" in plan_of(df)
+
+    monkeypatch.setattr(E, "_ISIN_PRUNE_LIMIT", 1)
+    monkeypatch.setenv("W2D_SERVING_V2", "0")
+    check(E.search_exact(spark, built, qdf, k=5, score_mode=mode))
+    monkeypatch.setenv("W2D_SERVING_CACHE", "0")     # pruned parquet scan
+    for search in (search_fast, search_wand):
+        check(search(spark, built, qdf, k=5, score_mode=mode))
+    monkeypatch.setenv("W2D_SERVING_CACHE", "1")     # cached segments
+    for search in (search_fast, search_wand):
+        for _ in range(2):
+            check(search(spark, built, qdf, k=5, score_mode=mode))
+    assert R._SEG_CACHE
+    for key in list(R._SEG_CACHE):
+        R._SEG_CACHE.pop(key).unpersist()
+    R._SEG_CACHE_SEEN.clear()
+
+
+def test_arrow_scopes_interleave(spark):
+    """Two _arrow_conversions scopes on one session that close out of
+    order: Arrow stays on while either is live, and the caller's value
+    comes back when the last one closes."""
+    from word2doc_spark.query.exact import _arrow_conversions
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    orig = spark.conf.get(key, "false")
+    spark.conf.set(key, "false")
+    try:
+        a, b = _arrow_conversions(spark), _arrow_conversions(spark)
+        a.__enter__()
+        b.__enter__()
+        a.__exit__(None, None, None)
+        assert spark.conf.get(key) == "true"
+        b.__exit__(None, None, None)
+        assert spark.conf.get(key) == "false"
+    finally:
+        spark.conf.set(key, orig)
+
+
 # ---------------------------------------------------------------------------
 # byte-bounded per-task cache
 # ---------------------------------------------------------------------------

@@ -97,6 +97,26 @@ _ROUTES_MIN = 32
 # partition size
 _PACK_FLUSH_POSTINGS = 8_000_000
 
+DOCS_SCHEMA = "doc_id long, url string"
+DOCLEN_SCHEMA = "doc_id long, dl long"
+# the published index tables as readers see them (hive partition column
+# last). Reading with the schema skips Spark's parquet schema inference,
+# which runs a job per read — per search call on the query path
+INDEX_SCHEMAS = {
+    "docs": DOCS_SCHEMA,
+    "doclen": DOCLEN_SCHEMA,
+    "shards": SEG_SCHEMA + ", shard_id int",
+    "terms": "term_id long, df long, segments long, bytes long, shard_id int",
+}
+
+
+def read_index_table(spark: SparkSession, index_dir: str,
+                     name: str) -> DataFrame:
+    """One published index table (``INDEX_SCHEMAS`` key) as a DataFrame,
+    read with its declared schema — no inference job."""
+    return (spark.read.schema(INDEX_SCHEMAS[name])
+            .parquet(os.path.join(index_dir, name)))
+
 
 def _fingerprint(config: IndexConfig, input_token: str) -> str:
     blob = json.dumps({"config": config.to_dict(), "input": input_token},
@@ -425,9 +445,9 @@ def _build_doclen(spark: SparkSession, stage_path: str, doclen_path: str,
     # inflated ~2× at the sf0.1 bench)
     (_staged_part(spark, stage_path, dl=True).select("blob")
            .coalesce(max(8, sp // 4))
-           .mapInPandas(decode_dl_pairs, "doc_id long, dl long")
+           .mapInPandas(decode_dl_pairs, DOCLEN_SCHEMA)
            .write.mode("overwrite").parquet(doclen_path))
-    doclen = spark.read.parquet(doclen_path)
+    doclen = spark.read.schema(DOCLEN_SCHEMA).parquet(doclen_path)
     dl_keyed = doclen.withColumn(
         "range_id", (F.col("doc_id") / F.lit(range_width)).cast("int")
     ).withColumn(
@@ -883,7 +903,7 @@ def build_index(
                 ("doc_ids",
                  lambda: (ranged.select("url", "_pkey")
                           .coalesce(n_docs_files)
-                          .mapInPandas(ids_only, "doc_id long, url string")
+                          .mapInPandas(ids_only, DOCS_SCHEMA)
                           .write.mode("overwrite").parquet(docs_path))),
                 ("analyze_stage",
                  lambda: _write_staged(
@@ -904,7 +924,7 @@ def build_index(
                               sub_walls=sub)
 
     if n_docs is None:
-        n_docs = spark.read.parquet(docs_path).count()
+        n_docs = read_index_table(spark, index_dir, "docs").count()
     range_width = manifest.read_marker("stage").get(
         "range_width",
         range_width_for(n_docs, resolve_n_ranges(config, n_docs)))
@@ -942,15 +962,19 @@ def build_index(
     # -- stage 3: segment encode (one job by default; grouped for finer
     #    resume). Dynamic partition overwrite makes a rerun of a group
     #    idempotent: it replaces exactly the hive partitions it produces.
-    done = manifest.completed_shards(fp)
-    groups = _shard_groups(config.num_shards, config.shards_per_job)
-    metrics["resumed_stages"].extend(
-        f"shard_{s}" for s in range(config.num_shards) if s in done)
-
-    overwrite_mode = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    #    The dl thread writes doclen/doclen_seg, so it is joined on EVERY
+    #    exit: a failed encode must not return while a writer still races
+    #    the caller's retry.
+    overwrite_mode = None
     try:
+        done = manifest.completed_shards(fp)
+        groups = _shard_groups(config.num_shards, config.shards_per_job)
+        metrics["resumed_stages"].extend(
+            f"shard_{s}" for s in range(config.num_shards) if s in done)
+        overwrite_mode = spark.conf.get(
+            "spark.sql.sources.partitionOverwriteMode", "static")
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode",
+                       "dynamic")
         # exclude the dl blobs — segment encode consumes posting blobs
         # only (layout-adaptive pruning, see _staged_part)
         staged_all = _staged_part(spark, stage_path, dl=False)
@@ -979,7 +1003,7 @@ def build_index(
             # per successful action) — the old shape paid a second
             # scan+groupBy job over the shards metadata, then a third
             # over the terms table
-            written = spark.read.parquet(shards_path).filter(
+            written = read_index_table(spark, index_dir, "shards").filter(
                 F.col("shard_id").isin(group))
             # repartition by shard_id BEFORE the agg: the partitioning
             # satisfies groupBy(shard_id, term_id) (subset clustering),
@@ -1016,7 +1040,7 @@ def build_index(
                            int(m[f"p{s}"] or 0), int(m[f"b{s}"] or 0))
                        for s in group}
             else:  # very wide groups: one tiny read of the terms table
-                srows = (spark.read.parquet(terms_path)
+                srows = (read_index_table(spark, index_dir, "terms")
                          .filter(F.col("shard_id").isin(group))
                          .groupBy("shard_id")
                          .agg(F.count("*").alias("terms"),
@@ -1037,11 +1061,11 @@ def build_index(
                     wall_s=wall / len(group),
                 )
     finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode",
-                       overwrite_mode)
-
-    if dl_thread is not None:
-        dl_thread.join()
+        if dl_thread is not None:
+            dl_thread.join()
+        if overwrite_mode is not None:
+            spark.conf.set("spark.sql.sources.partitionOverwriteMode",
+                           overwrite_mode)
         if dl_errs:
             raise dl_errs[0]
 

@@ -14,9 +14,10 @@ Scale notes:
   pushdown on ``term_id IN (...)`` and hive partition pruning on
   ``shard_id IN (...)`` — a batch of queries touches only the shards its
   terms hash into, and reads only (term_id, range_id, doc_lo, payload).
-* per-term IDF comes from the ``terms/`` stats table (same pruned-scan
-  pattern), so posting rows carry no denormalized df and the query plan
-  needs no big join-back.
+* per-term IDF comes from the ``terms/`` stats table (the same two
+  prunes, read with pyarrow in the driver — no Spark job), so posting
+  rows carry no denormalized df and the query plan needs no big
+  join-back.
 * posting payloads are bounded segments (≤ max_seg_postings), never one
   unbounded cell per term — a df=N stop-bigram decodes as many small
   tasks, not one multi-GB row.
@@ -28,14 +29,17 @@ Scale notes:
 
 from __future__ import annotations
 
+import contextlib
 import os
+import threading
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
 
 from word2doc_spark.config import IndexConfig
+from word2doc_spark.index.build import read_index_table
 from word2doc_spark.index.manifest import Manifest
 from word2doc_spark.index.postings import decode_postings
 
@@ -125,6 +129,42 @@ def analyze_query_rows(rows, config: IndexConfig,
     })
 
 
+def _int_list_sql(values) -> str:
+    return ", ".join(str(int(v)) for v in values)
+
+
+def _in_ids(col: str, ids) -> Column:
+    """``col IN (ids)`` as one SQL expression: one Py4J call for any
+    number of ids, where ``Column.isin`` crosses into the JVM once per
+    literal (~0.4 ms each — 0.6 s for a 1.5k-term batch). Catalyst casts
+    the integer literals to the column's type, so parquet row-group
+    pushdown and hive partition pruning apply as before."""
+    if len(ids) == 0:
+        return F.lit(False)
+    return F.expr(f"`{col}` IN ({_int_list_sql(ids)})")
+
+
+def _int_array(values) -> Column:
+    """``array(values)`` literal column in one Py4J call (see _in_ids)."""
+    return F.expr(f"array({_int_list_sql(values)})")
+
+
+def _filter_terms(df: DataFrame, term_ids: list) -> DataFrame:
+    """Restrict ``df`` to rows whose ``term_id`` is in ``term_ids``: an
+    ``IN`` filter (pushed down to parquet; on a cached table it keeps the
+    streamed side's partitioning) or, above _ISIN_PRUNE_LIMIT ids, a
+    broadcast left-semi join against a LocalRelation built from Arrow in
+    the driver (a parallelized Python list runs Python tasks to read)."""
+    if len(term_ids) <= _ISIN_PRUNE_LIMIT:
+        return df.filter(_in_ids("term_id", term_ids))
+    spark = df.sparkSession
+    with _arrow_conversions(spark):
+        wanted = spark.createDataFrame(
+            pd.DataFrame({"term_id": np.asarray(term_ids, dtype=np.int64)}),
+            "term_id long")
+    return df.join(F.broadcast(wanted), "term_id", "left_semi")
+
+
 def _prune_terms(df: DataFrame, term_ids,
                  num_shards: int) -> DataFrame:
     """Prune a shard-partitioned table to the query batch's terms.
@@ -138,25 +178,39 @@ def _prune_terms(df: DataFrame, term_ids,
                 F.pmod(F.col("term_id"), F.lit(num_shards))
                 .cast("int").alias("s")).distinct().collect())
         if len(shard_ids) < num_shards:
-            df = df.filter(F.col("shard_id").isin(shard_ids))
+            df = df.filter(_in_ids("shard_id", shard_ids))
         return df.join(F.broadcast(term_ids.select("term_id")),
                        "term_id", "left_semi")
     shard_ids = sorted({t % num_shards for t in term_ids})
     if len(shard_ids) < num_shards:
-        df = df.filter(F.col("shard_id").isin(shard_ids))
-    if len(term_ids) <= _ISIN_PRUNE_LIMIT:
-        # row-group predicate pushdown on term_id
-        return df.filter(F.col("term_id").isin(term_ids))
-    spark = df.sparkSession
-    wanted = spark.createDataFrame([(int(t),) for t in term_ids],
-                                   "term_id long")
-    return df.join(F.broadcast(wanted), "term_id", "left_semi")
+        df = df.filter(_in_ids("shard_id", shard_ids))
+    return _filter_terms(df, term_ids)
+
+
+def _read_pruned(index_dir: str, table: str, columns: list, term_ids,
+                 num_shards: int, extra=None):
+    """pyarrow read of a shard-partitioned index table (``shards`` or
+    ``terms``) restricted to ``term_ids`` — hive partition pruning via
+    the term→shard route, row-group pushdown on term_id, ``extra``
+    pyarrow filter ANDed on. Runs in the calling process: no Spark job."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+    ids = [int(t) for t in term_ids]
+    filt = pc.field("term_id").isin(ids)
+    shard_ids = sorted({t % num_shards for t in ids})
+    if len(shard_ids) < num_shards:
+        filt = filt & pc.field("shard_id").isin(shard_ids)
+    if extra is not None:
+        filt = filt & extra
+    ds = pads.dataset(os.path.join(index_dir, table), format="parquet",
+                      partitioning="hive")
+    return ds.to_table(columns=columns, filter=filt)
 
 
 def _matched_segments(spark: SparkSession, index_dir: str,
                       term_ids, num_shards: int,
                       with_counts: bool = False) -> DataFrame:
-    segs = spark.read.parquet(os.path.join(index_dir, "shards"))
+    segs = read_index_table(spark, index_dir, "shards")
     cols = ["term_id", "range_id", "doc_lo", "payload"]
     if with_counts:
         cols.insert(3, "n_postings")
@@ -177,7 +231,8 @@ _TERM_DF_CACHE_MAX_TERMS = 4_000_000
 def _term_dfs(spark: SparkSession, index_dir: str, term_ids: list,
               num_shards: int, bid: str | None = None) -> dict:
     """{term_id: df} for the given terms (0 = absent from the index),
-    via the build-keyed driver cache + one pruned scan for the misses."""
+    via the build-keyed driver cache + one pruned pyarrow read of the
+    ``terms/`` table for the misses (no Spark job)."""
     cache = None
     if bid is not None:
         if sum(len(v) for v in _TERM_DF_CACHE.values()) \
@@ -189,10 +244,10 @@ def _term_dfs(spark: SparkSession, index_dir: str, term_ids: list,
         cache = {}
         missing = list(term_ids)
     if missing:
-        stats = _prune_terms(
-            spark.read.parquet(os.path.join(index_dir, "terms")),
-            missing, num_shards).select("term_id", "df").collect()
-        got = {r["term_id"]: r["df"] for r in stats}
+        tbl = _read_pruned(index_dir, "terms", ["term_id", "df"], missing,
+                           num_shards)
+        got = dict(zip(tbl.column("term_id").to_pylist(),
+                       tbl.column("df").to_pylist()))
         for t in missing:
             cache[t] = got.get(t, 0)
     return cache
@@ -231,8 +286,8 @@ def weighted_query_terms_distributed(spark: SparkSession, index_dir: str,
     index and zero-weight terms drop, exactly as in the driver variant.
     The stats side is vocabulary-bounded (≤ hash_size rows), the qt side
     is batch-sized — a plain shuffle join AQE can re-plan."""
-    stats = (spark.read.parquet(os.path.join(index_dir, "terms"))
-             .select("term_id", "df"))
+    stats = read_index_table(spark, index_dir, "terms").select(
+        "term_id", "df")
     idf = F.greatest(
         F.lit(0.0),
         F.log((F.lit(float(n_docs)) - F.col("df") + 0.5)
@@ -248,25 +303,37 @@ def weighted_query_terms_distributed(spark: SparkSession, index_dir: str,
               .select(*cols))
 
 
-import contextlib
+# live _arrow_conversions scopes per session: {id(session): [count,
+# caller's value]}. Entries exist only while a scope holds the session,
+# so the id cannot be reused by another live object
+_ARROW_SCOPES: dict = {}
+_ARROW_SCOPES_LOCK = threading.Lock()
 
 
 @contextlib.contextmanager
 def _arrow_conversions(spark: SparkSession):
     """Arrow-backed toPandas/createDataFrame for the scope (columnar
     batches instead of per-row pickling — measured ~1.6× on a 120k-row
-    weighted-terms table); restores the caller's session conf."""
+    weighted-terms table). Scopes on one session are reference-counted:
+    the first to enter saves the caller's value and the last to leave
+    restores it, so interleaved scopes (threads, or generators closed out
+    of order) never turn Arrow off inside a live scope."""
     key = "spark.sql.execution.arrow.pyspark.enabled"
-    old = spark.conf.get(key, "false")
-    spark.conf.set(key, "true")
+    sid = id(spark)
+    with _ARROW_SCOPES_LOCK:
+        scope = _ARROW_SCOPES.get(sid)
+        if scope is None:
+            scope = _ARROW_SCOPES[sid] = [0, spark.conf.get(key, "false")]
+            spark.conf.set(key, "true")
+        scope[0] += 1
     try:
         yield
     finally:
-        # restore only if the flag still holds OUR value: two scopes
-        # interleaving on one session must not clobber each other's
-        # restore (outermost-wins would re-disable a scope still active)
-        if spark.conf.get(key, "false") == "true":
-            spark.conf.set(key, old)
+        with _ARROW_SCOPES_LOCK:
+            scope[0] -= 1
+            if scope[0] == 0:
+                del _ARROW_SCOPES[sid]
+                spark.conf.set(key, scope[1])
 
 
 def resolve_analysis_mode(queries: DataFrame, analysis: str,
@@ -420,11 +487,14 @@ def _empty_result(spark: SparkSession) -> DataFrame:
 def attach_urls(spark: SparkSession, index_dir: str,
                 topk: DataFrame) -> DataFrame:
     """url lookup: top-k is ≤ Q·k rows — broadcast it so the (potentially
-    enormous) docs table is never shuffled."""
-    docs = spark.read.parquet(os.path.join(index_dir, "docs"))
+    enormous) docs table is never shuffled. The joined ≤ Q·k rows are
+    ordered in one partition: a global orderBy would run a range-sampling
+    job first, and coalesce(1) would pull the docs scan into one task."""
+    docs = read_index_table(spark, index_dir, "docs")
     return (docs.join(F.broadcast(topk), "doc_id")
                 .select("query_id", "rank", "doc_id", "url", "score")
-                .orderBy("query_id", "rank"))
+                .repartition(1)
+                .sortWithinPartitions("query_id", "rank"))
 
 
 def search_exact(
@@ -504,7 +574,7 @@ def search_exact(
                   .groupBy("query_id", "doc_id")
                   .agg(F.sum("contrib").alias("score")))
     else:
-        doclen = spark.read.parquet(os.path.join(index_dir, "doclen"))
+        doclen = read_index_table(spark, index_dir, "doclen")
         with_dl = contribs.join(doclen, "doc_id")
         per_term = with_dl.withColumn(
             "contrib",

@@ -59,10 +59,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 import pyspark.sql.functions as F
 
+from word2doc_spark.index.build import read_index_table
 from word2doc_spark.index.manifest import Manifest
 from word2doc_spark.index.postings import decode_postings
 from word2doc_spark.query.exact import (
-    _empty_result, _matched_segments, attach_urls, prepare_weighted_terms,
+    _empty_result, _filter_terms, _int_array, _matched_segments,
+    _read_pruned, attach_urls, prepare_weighted_terms,
 )
 
 CAND_SCHEMA = "query_id long, doc_id long, score double"
@@ -809,7 +811,7 @@ def _serving_segs(spark, index_dir, bid, sp, slot_arr, index_bytes):
     if _SEG_CACHE_SEEN[key] < 2:
         return None
     from pyspark import StorageLevel
-    segs = (spark.read.parquet(os.path.join(index_dir, "shards"))
+    segs = (read_index_table(spark, index_dir, "shards")
             .select("term_id", "range_id", "doc_lo", "n_postings",
                     "payload")
             .withColumn("_g", F.element_at(
@@ -824,19 +826,6 @@ def _serving_segs(spark, index_dir, bid, sp, slot_arr, index_bytes):
             pass
     _SEG_CACHE[key] = segs
     return segs
-
-
-def _prune_cached_segs(segs: DataFrame, term_ids: list) -> DataFrame:
-    """Term pruning over the cached slot-keyed table. Both shapes (isin
-    filter, broadcast left-semi) preserve the streamed side's hash
-    partitioning on _g — no exchange reappears downstream."""
-    from word2doc_spark.query.exact import _ISIN_PRUNE_LIMIT
-    if len(term_ids) <= _ISIN_PRUNE_LIMIT:
-        return segs.filter(F.col("term_id").isin(term_ids))
-    spark = segs.sparkSession
-    wanted = spark.createDataFrame([(int(t),) for t in term_ids],
-                                   "term_id long")
-    return segs.join(F.broadcast(wanted), "term_id", "left_semi")
 
 
 # process-resident serving cache (serving mode v2): the JVM-persisted
@@ -928,17 +917,11 @@ def _load_group_terms(index_dir, e, granges, missing,
     Spark job): shard partition pruning via the term→shard route,
     row-group pushdown on term_id, range restriction to the group."""
     import pyarrow.compute as pc
-    import pyarrow.dataset as pads
     miss = [int(t) for t in missing]
-    ds = pads.dataset(os.path.join(index_dir, "shards"),
-                      format="parquet", partitioning="hive")
-    filt = (pc.field("term_id").isin(miss)
-            & pc.field("range_id").isin([int(r) for r in granges]))
-    shard_ids = sorted({t % num_shards for t in miss})
-    if len(shard_ids) < num_shards:
-        filt = filt & pc.field("shard_id").isin(shard_ids)
-    tbl = ds.to_table(columns=["term_id", "doc_lo", "payload"],
-                      filter=filt)
+    tbl = _read_pruned(index_dir, "shards", ["term_id", "doc_lo", "payload"],
+                       miss, num_shards,
+                       extra=pc.field("range_id").isin(
+                           [int(r) for r in granges]))
     tids = tbl.column("term_id").to_numpy()
     dlos = tbl.column("doc_lo").to_numpy()
     payloads = tbl.column("payload").to_pylist()
@@ -1052,7 +1035,7 @@ def _score_ranges_broadcast(spark, index_dir, term_pred, config, wqt,
     from word2doc_spark.index.build import _partition_slots
     sp = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     slots = _partition_slots(sp)
-    slot_arr = F.array(*[F.lit(x) for x in slots])
+    slot_arr = _int_array(slots)
 
     # serving v2 (process-resident chains) is OPT-IN: measured on this
     # single-box pool, task→python-worker assignment is arbitrary, so
@@ -1089,7 +1072,7 @@ def _score_ranges_broadcast(spark, index_dir, term_pred, config, wqt,
                 .repartition(sp, "_g"))
         seg_persisted = True
     elif cached is not None:
-        segs = (_prune_cached_segs(cached, term_pred)
+        segs = (_filter_terms(cached, term_pred)
                 .select("range_id", "term_id", "doc_lo", "payload", "_g"))
         seg_persisted = True
     else:
@@ -1194,7 +1177,7 @@ def _densest_ranges(spark, index_dir, term_pred, config,
     ``segs_meta``: serving-cache segment table to read the metadata from
     (in-memory columnar, payload column pruned) instead of parquet."""
     if segs_meta is not None:
-        base = (_prune_cached_segs(segs_meta, term_pred)
+        base = (_filter_terms(segs_meta, term_pred)
                 .select("term_id", "range_id", "n_postings"))
     else:
         base = _matched_segments(spark, index_dir, term_pred,
